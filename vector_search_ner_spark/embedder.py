@@ -78,10 +78,11 @@ def embed_texts_numpy(texts: pd.Series, dim: int = DEFAULT_DIM) -> list[list[flo
 
 
 class HashingEmbedder:
-    # one UDF object per dim, shared across instances: repeated query
-    # invocations then build canonically-EQUAL plans, so Spark's cache
-    # manager dedupes persisted relations derived from the embedder
-    # instead of accumulating a new cache entry per invocation
+    # one UDF object per dim, shared across instances: repeating a
+    # query over the SAME input then builds a canonically-equal plan,
+    # which Spark's cache manager can match against an earlier persist.
+    # A different input (every new query batch) is a different plan, so
+    # a per-call persist still adds one cache entry per call
     _udf_cache: dict[int, object] = {}
 
     def __init__(self, dim: int = DEFAULT_DIM):

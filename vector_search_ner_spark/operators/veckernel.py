@@ -50,7 +50,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, IntegerType, LongType
+from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
 
 # rows per distance-matrix chunk are bounded so the (rows x n_cent)
 # float64 temporaries stay ~32 MB regardless of quantizer size
@@ -315,3 +315,41 @@ def pair_sqdist(a: Column | str, b: Column | str) -> Column:
 def pair_dot(a: Column | str, b: Column | str) -> Column:
     """Arrow twin of functions.vector.dot_product."""
     return _pair_dot_udf(a, b)
+
+
+def probe_dots(vec: Column | str, probes: np.ndarray) -> Column:
+    """Dot product of every row's array<double> vector with EACH row of
+    a small driver-held (k, dim) probe matrix, as one array<double> of
+    k dots per row — the Arrow twin of
+
+        array(dot_product_nc(vec, p_0), ..., dot_product_nc(vec, p_k-1))
+
+    in one pass over the batch. Each dot accumulates per-dimension in
+    index order (bit-identity contract), so `pair_dot` over a
+    (row x probe) crossJoin becomes one map-only ArrowEval over the row
+    scan: each row vector crosses the Arrow boundary once, and the
+    probe matrix ships once, in the UDF closure. A NULL vector, or one
+    whose length is not dim, gets a NULL array (the fold's NULL); with
+    k = 0 every other row gets the empty array."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    P = np.asarray(probes, dtype=np.float64)
+    k, dim = P.shape
+
+    @F.arrow_udf(ArrayType(DoubleType()))
+    def fn(col):
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        n = len(col)
+        ok = np.asarray(pc.fill_null(pc.equal(pc.list_value_length(col), dim), False))
+        X = np.zeros((n, dim), dtype=np.float64)
+        if ok.any():
+            X[ok] = np.asarray(col.filter(pa.array(ok)).flatten(), dtype=np.float64).reshape(-1, dim)
+        D = np.zeros((n, k), dtype=np.float64)
+        for d in range(dim):
+            D += X[:, d, None] * P[None, :, d]
+        offsets = pa.array(np.arange(n + 1, dtype=np.int32) * k, type=pa.int32())
+        return pa.ListArray.from_arrays(offsets, pa.array(D.reshape(-1)), mask=pa.array(~ok))
+
+    return fn(vec)

@@ -34,6 +34,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from vector_search_ner_spark.embedder import DEFAULT_DIM, HashingEmbedder
 from vector_search_ner_spark.functions.vector import l2_norm, to_double_array
@@ -48,6 +49,11 @@ ARTIFACT_DIR = os.path.join(
 # part of the artifact key, so old stores are retired
 # (v2: added the pre-cast dvec_d array<double> scoring column)
 EMBEDDER_VERSION = 2
+
+# each opened store path's schema, kept in process: the path is
+# fingerprint-keyed, so a stored schema cannot go stale, and opening
+# with it skips the footer-read job of parquet schema inference
+_SCHEMAS: dict[str, StructType] = {}
 
 
 def _store_path(sf_dir: str, dim: int) -> str:
@@ -75,7 +81,8 @@ def doc_vector_store(
     saves two interpreted casts per element per pair), __dnorm double.
     The build is the map-only Arrow-batched embed (one corpus scan, no
     shuffle); the read is a plain parquet scan that prunes to whatever
-    columns the consumer selects.
+    columns the consumer selects. Only a path's first open in a process
+    infers the schema; later opens fire no job.
     """
     path = _store_path(sf_dir, dim)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -96,4 +103,9 @@ def doc_vector_store(
             .withColumn("__dnorm", l2_norm(F.col("dvec")))
         )
         built.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    schema = _SCHEMAS.get(path)
+    if schema is None:
+        store = spark.read.parquet(path)
+        _SCHEMAS[path] = store.schema
+        return store
+    return spark.read.schema(schema).parquet(path)
