@@ -1,7 +1,8 @@
-"""The v2 lattice serve path (plans/queries_pipeline.v2_lattice) as a
-served operation: the probe-matrix scoring kernel, its job budget and
-cache footprint per call, degenerate inputs, and independence from the
-shuffle partition count."""
+"""The staged-retrieval lattices (plans/queries_pipeline: v2_lattice,
+v2_lattice_topk and the v1 hybrid) as served operations: the
+probe-matrix scoring kernel, their job budget and cache footprint per
+call, degenerate inputs, and independence from the shuffle partition
+count."""
 
 from __future__ import annotations
 
@@ -121,10 +122,15 @@ def test_probe_dots_bit_equal_to_fold(spark):
 
 def test_lattice_serve_call_budget_and_no_cache_leak(spark, sf_dir):
     """Serving many batches must not accumulate cached relations, and
-    one call (construction + collect) must stay within 5 Spark jobs:
-    the probe collect, the probe broadcast, and the one shuffle's map
-    and result stages."""
-    from vector_search_ner_spark.plans.queries_pipeline import v2_lattice
+    one call (construction + collect) must stay within 5 Spark jobs for
+    v2_lattice (the probe collect, the probe broadcast, and the one
+    shuffle's map and result stages) and 6 for v2_lattice_topk (one
+    more shuffle). The v1 hybrid, one shuffle too, stays within 5."""
+    from vector_search_ner_spark.plans.queries_pipeline import (
+        staged_retrieval_v1_hybrid,
+        v2_lattice,
+        v2_lattice_topk,
+    )
     from vector_search_ner_spark.sources.vecstore import doc_vector_store
 
     doc_vector_store(spark, sf_dir)  # the store is built at set-up, not per call
@@ -135,40 +141,55 @@ def test_lattice_serve_call_budget_and_no_cache_leak(spark, sf_dir):
         [(300, "fast", "neardup"), (301, None, "sort"), (302, "slow", "scan")],
         [(400, "stream", None)],
     ]
-    for i, batch in enumerate(batches):
-        probes = spark.createDataFrame(_probe_rows(batch), PROBE_DDL)
+    for lattice, budget in ((v2_lattice, 5), (v2_lattice_topk, 6)):
+        for i, batch in enumerate(batches):
+            probes = spark.createDataFrame(_probe_rows(batch), PROBE_DDL)
+            rows, n_jobs = _jobs(
+                spark,
+                f"{lattice.__name__}-call-{i}",
+                lambda: lattice(spark, sf_dir, probes).collect(),
+            )
+            assert rows, (lattice.__name__, batch)
+            assert n_jobs <= budget, (lattice.__name__, i, n_jobs)
+    for i in range(2):
         rows, n_jobs = _jobs(
-            spark, f"lattice-call-{i}", lambda: v2_lattice(spark, sf_dir, probes).collect()
+            spark, f"v1-hybrid-call-{i}", lambda: staged_retrieval_v1_hybrid(spark, sf_dir).collect()
         )
-        assert rows, batch
-        assert n_jobs <= 5, (i, n_jobs)
+        assert rows
+        assert n_jobs <= 5, ("staged_retrieval_v1_hybrid", i, n_jobs)
     cache = spark._jsparkSession.sharedState().cacheManager()
-    assert cache.isEmpty(), "v2_lattice left cached relations behind"
+    assert cache.isEmpty(), "a lattice left cached relations behind"
 
 
 def test_lattice_degenerate_inputs(spark, tiny_corpus):
     """No raise on an empty probe batch, a probe with empty text (both
-    fields absent), or a doc with empty text; the non-empty batch
-    still equals its oracle."""
-    from vector_search_ner_spark.plans.queries_pipeline import v2_lattice
+    fields absent), or a doc with empty text, in either v2 lattice; the
+    non-empty batch still equals its oracle."""
+    from vector_search_ner_spark.plans.queries_pipeline import v2_lattice, v2_lattice_topk
 
     empty = spark.createDataFrame([], PROBE_DDL)
-    assert v2_lattice(spark, tiny_corpus, empty).collect() == []
-
     batch = [(0, "scan", "join"), (1, None, None), (2, "slow", "neardup"), (3, "fast", "qqqq")]
     probes = spark.createDataFrame(_probe_rows(batch), PROBE_DDL)
-    got = v2_lattice(spark, tiny_corpus, probes).toPandas()
-    assert set(got.query_id) == {0, 1, 2, 3}
-    assert_frames_match(got, _oracle(batch, os.path.join(tiny_corpus, "documents.parquet")))
+    want = _oracle(batch, os.path.join(tiny_corpus, "documents.parquet"))
+    for lattice in (v2_lattice, v2_lattice_topk):
+        assert lattice(spark, tiny_corpus, empty).collect() == [], lattice.__name__
+        got = lattice(spark, tiny_corpus, probes).toPandas()
+        assert set(got.query_id) == {0, 1, 2, 3}, lattice.__name__
+        assert_frames_match(got, want, lattice.__name__)
 
 
 def test_lattice_partition_count_invariant(spark, sf_dir):
-    """The lattice's stage windows rest on query_id co-location after
-    its one shuffle, so answers must not move with the partition count."""
+    """The lattices' stage windows rest on query_id co-location after
+    their shuffle, so answers must not move with the partition count."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "13")
     try:
-        for name in ("staged_retrieval_pipeline", "chat_pipeline_e2e"):
+        for name in (
+            "staged_retrieval_pipeline",
+            "chat_pipeline_e2e",
+            "staged_retrieval_topk_scale",
+            "staged_retrieval_v1_hybrid",
+        ):
             check_query(spark, name, sf_dir)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)

@@ -8,17 +8,15 @@ Engine design: extraction is a DataFrame->DataFrame operator behind an
 interface; the RULE-BASED implementation is pure column exprs
 (deterministic, oracle-checkable); the LLM implementation is an
 optional mapInPandas drop-in (network calls quarantined off the
-oracle path). The JSON round-trip (to_json / markdown-fence strip /
-from_json with an explicit schema) is engine-native.
+oracle path). The LLM adapter strips markdown fences from the raw
+model output and parses it against NER_SCHEMA, padding missing fields.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from vector_search_ner_spark.functions.text import strip_markdown_fences
 
 # The reference's 9-field NER struct, with its space-bearing Korean
 # field names and the 지역/근무지역/근무 지역 drift
@@ -36,19 +34,6 @@ NER_SCHEMA = T.StructType(
         T.StructField("복리후생", T.ArrayType(T.StringType())),
     ]
 )
-
-
-def parse_ner_json(col: Column) -> Column:
-    """LLM-output hygiene + parse: strip ```json fences (reference
-    main.py:214,288,434) then from_json with the explicit schema."""
-    return F.from_json(strip_markdown_fences(col), NER_SCHEMA)
-
-
-def region_with_drift(ner: Column) -> Column:
-    """Field-name-drift coalesce (reference probes 근무 지역 /
-    근무지역 / 지역, main.py:266; v1 even a typo'd key,
-    main_remind.py:438)."""
-    return F.coalesce(ner["근무 지역"], F.lit(""))
 
 
 class RuleBasedExtractor:
@@ -71,8 +56,8 @@ class RuleBasedExtractor:
 
 
 def strip_markdown_fences_py(s: str) -> str:
-    """Python twin of `strip_markdown_fences` (same regex semantics):
-    the adapter-side hygiene applied to raw model output before JSON
+    """Strip ```json fences and surrounding whitespace: the
+    adapter-side hygiene applied to raw model output before JSON
     parsing (reference main.py:214,288,434)."""
     import re
 

@@ -23,11 +23,6 @@ def clean_text(col: Column) -> Column:
     return F.trim(no_nl)
 
 
-def strip_markdown_fences(col: Column) -> Column:
-    """Remove ```json ... ``` fences (reference: main.py:214,288,434)."""
-    return F.trim(F.regexp_replace(col, "```json|```", ""))
-
-
 def sanitize_id(col: Column) -> Column:
     """Replace non [a-zA-Z0-9_-] chars with '_'."""
     return F.regexp_replace(col, "[^a-zA-Z0-9_-]", "_")

@@ -77,10 +77,6 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot_product(a, b) / denom)
 
 
-def cosine_distance(a: Column, b: Column) -> Column:
-    return F.lit(1.0) - cosine_similarity(a, b)
-
-
 # ---------------------------------------------------------------------------
 # DuckDB oracle fragments — the exact same folds, as ANSI-ish SQL text.
 # Kept next to the Spark exprs so they can't drift apart.

@@ -1526,7 +1526,7 @@ def dedup_simhash_eval_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COS_EVAL_N = 400  # all-pairs exact cosine affordable on <=400 vectors
 
 
-_COS_EVAL_MAX_DEPTH = 2  # deepest probe tier in MULTIPROBE_MASKS
+_COS_EVAL_MAX_DEPTH = 2  # deepest Hamming radius graded (the flip-2 neighbours)
 
 
 def _duck_cosine_eval() -> str:
